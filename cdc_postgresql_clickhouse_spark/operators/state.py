@@ -17,8 +17,10 @@ memory, which is the 100 TB posture. Two equivalent consumption modes:
 2. ``apply_changes`` — batch/micro-batch upsert that materializes the merged
    state (the background-merge analogue). On Delta this is ``MERGE INTO``;
    on plain parquet we implement merge-by-rewrite: union(state, updates) →
-   arg-max → overwrite. With state partitioned by key-hash bucket, only
-   buckets containing updated keys need rewriting at scale.
+   arg-max → rewrite. State is partitioned by key-hash bucket, so only
+   buckets containing updated keys are rewritten, and ``write_state`` is the
+   one commit path: a journaled per-bucket rename swap, so a crash at any
+   point leaves every bucket wholly old or wholly new.
 
 Version semantics, NOT event time (survey ST2): a late event simply loses the
 max-version contest; no watermarks. Idempotent under at-least-once replay
@@ -217,6 +219,16 @@ def _bucket_expr(key_cols: tuple[str, ...], n_buckets: int):
     return F.pmod(F.xxhash64(*key_cols), F.lit(n_buckets))
 
 
+def touched_buckets(
+    df: DataFrame, key_cols: tuple[str, ...], key_buckets: int
+) -> list[int]:
+    """The sorted distinct key-hash buckets ``df``'s keys fall in — a
+    collect of at most ``key_buckets`` rows, never bounded by data."""
+    return sorted(
+        r[0] for r in df.select(_bucket_expr(key_cols, key_buckets)).distinct().collect()
+    )
+
+
 def read_state(
     spark: SparkSession, path: str, buckets: list[int] | None = None
 ) -> DataFrame | None:
@@ -224,23 +236,23 @@ def read_state(
     key-hash buckets (partition pruning: only those directories are scanned —
     the read is O(touched buckets), not O(state)).
 
-    A torn bucket swap (crash between ``publish_state_buckets``' per-bucket
-    renames) is rolled FORWARD here, under the state lock, before the read
-    plans — a direct reader would otherwise see a journaled-but-unswapped
-    bucket as never-committed state (ADVICE r8). Lock discipline (ADVICE
-    r9): if THIS process already holds the path's lock (every ingest path —
-    fold/upsert/compact — calls read_state inside its locked section), heal
-    directly under the caller's lock; re-acquiring the non-reentrant O_EXCL
-    lock would raise StateLockError against the caller's own fence. A
-    lock-free read takes the lock UNCONDITIONALLY and heals under it — the
+    A torn bucket swap (crash between ``write_state``'s per-bucket renames)
+    is rolled FORWARD here, under the state lock, before the read plans — a
+    direct reader would otherwise see a journaled-but-unswapped bucket as
+    never-committed state (ADVICE r8). Lock discipline (ADVICE r9): if THIS
+    process already holds the path's lock (every mutator — fold, upsert,
+    compact, dedup, SCD2 — calls read_state inside its locked section),
+    heal directly under the caller's lock; re-acquiring the non-reentrant
+    O_EXCL lock would raise StateLockError against the caller's own fence.
+    A lock-free read takes the lock UNCONDITIONALLY and heals under it — the
     former check-then-lock (``exists(journal)`` before acquiring) could run
-    before a live publish wrote its journal and then plan over a
-    half-swapped directory; now a live publish makes the read raise
-    ``StateLockError`` instead, which beats reading torn state. Residual
-    TOCTOU, by design: the lock is released before the scan executes, so a
-    publish STARTING after release can still swap buckets mid-read —
-    race-free concurrent read-while-publish needs the storage layer
-    (Delta/ACID); this file-based machinery is the local[] harness."""
+    before a live swap wrote its journal and then plan over a half-swapped
+    directory; now a live swap makes the read raise ``StateLockError``
+    instead, which beats reading torn state. Residual TOCTOU, by design: the
+    lock is released before the scan executes, so a swap STARTING after
+    release can still replace buckets mid-read — race-free concurrent
+    read-while-write needs the storage layer (Delta/ACID); this file-based
+    machinery is the local[] harness."""
     if os.path.abspath(path) in _HELD_LOCKS:
         recover_bucket_swap(path)
     else:
@@ -261,38 +273,11 @@ def read_state(
     return df
 
 
-def write_state(
-    state: DataFrame,
-    path: str,
-    key_buckets: int | None = None,
-    key_cols: tuple[str, ...] = DEFAULT_KEY,
-    dynamic_overwrite: bool = False,
-) -> None:
-    """Materialize merged state. ``key_buckets`` lays the table out as
-    ``__bucket=K`` partition directories keyed on ``pmod(xxhash64(key), N)``
-    — the unit of incremental rewrite. With ``dynamic_overwrite`` only the
-    partitions PRESENT in ``state`` are replaced (Spark dynamic partition
-    overwrite); untouched bucket directories are left byte-identical. On
-    Delta this whole function becomes MERGE + OPTIMIZE."""
-    if key_buckets:
-        out = state.withColumn(BUCKET_COL, _bucket_expr(key_cols, key_buckets))
-        # keyed repartition → each bucket lands in one task → one file/bucket
-        out = out.repartition(F.col(BUCKET_COL))
-        (
-            out.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic" if dynamic_overwrite else "static")
-            .partitionBy(BUCKET_COL)
-            .parquet(path)
-        )
-    else:
-        state.write.mode("overwrite").parquet(path)
-
-
 _SWAP_JOURNAL = "_state_swap_journal.json"
 
 
 def recover_bucket_swap(path: str) -> bool:
-    """Finish a ``publish_state_buckets`` swap interrupted by a crash.
+    """Finish a ``write_state`` swap interrupted by a crash.
 
     The journal is written only AFTER the staged write is complete, so
     recovery always rolls FORWARD: any journaled bucket still present in
@@ -300,8 +285,7 @@ def recover_bucket_swap(path: str) -> bool:
     rename is atomic per bucket); buckets already swapped are skipped.
     Returns True if a torn swap was healed. Callers must hold the state
     lock. An orphan staging dir with NO journal (crash mid-staged-write)
-    is deleted — the old state is intact and the batch replays through
-    the per-bucket fence."""
+    is deleted — the old state is intact and the batch replays."""
     import json
     import shutil
 
@@ -325,20 +309,23 @@ def recover_bucket_swap(path: str) -> bool:
     return True
 
 
-def publish_state_buckets(
+def write_state(
     state: DataFrame,
     path: str,
     key_buckets: int,
     key_cols: tuple[str, ...] = DEFAULT_KEY,
 ) -> None:
-    """Crash-atomic per-bucket publish — the replacement for a raw dynamic
-    partition overwrite wherever a replay fence reads ``applied_bid`` back
-    from the table (ADVICE r7: Spark's multi-bucket dynamic overwrite is not
-    atomic even WITHIN a bucket — a crash mid job-commit can leave one bucket
-    dir holding a mix of old- and new-batch files, and min(applied_bid)
-    then re-applies the batch to rows already folded, a double-fold; the
-    delete-then-rename window can even leave a bucket EMPTY, which a fence
-    reads as never-committed and silently drops the bucket's history).
+    """Commit ``state`` into the table at ``path``, laid out as
+    ``__bucket=K`` partition directories keyed on ``pmod(xxhash64(key), N)``
+    — the unit of incremental rewrite. Exactly the buckets PRESENT in
+    ``state`` are replaced; every other bucket directory is left
+    byte-identical. The only write path for bucketed state, and
+    crash-atomic per bucket: a raw Spark partition overwrite is not atomic
+    even WITHIN a bucket (ADVICE r7 — a crash mid job-commit can leave one
+    bucket dir holding a mix of old- and new-batch files, and its
+    delete-then-rename window can leave a bucket EMPTY, which a replayed
+    merge reads as never-committed and so silently drops the bucket's
+    history).
 
     Protocol (same journal discipline as ``layout.optimize_clustered``):
     (1) write the touched buckets' COMPLETE new state to a sibling staging
@@ -347,7 +334,8 @@ def publish_state_buckets(
     bucket is either wholly old or wholly new at all times); (4) clear the
     journal and staging dir. A crash in (1) leaves an orphan staging dir and
     the old state intact; a crash in (3) is rolled forward by
-    ``recover_bucket_swap``. Callers must hold the state lock."""
+    ``recover_bucket_swap`` (which ``read_state`` runs). Callers must hold
+    the state lock. On Delta this whole function becomes MERGE + OPTIMIZE."""
     import json
     import shutil
 
@@ -356,6 +344,7 @@ def publish_state_buckets(
         shutil.rmtree(staged_root)
     out = state.withColumn(BUCKET_COL, _bucket_expr(key_cols, key_buckets))
     (
+        # keyed repartition → each bucket lands in one task → one file/bucket
         out.repartition(F.col(BUCKET_COL))
         .write.mode("overwrite")
         .partitionBy(BUCKET_COL)
@@ -402,26 +391,24 @@ def upsert_changes_bucketed(
     driver-side but bounded by ``key_buckets``, never by data; (2) read ONLY
     those bucket partitions (partition-pruned scan); (3) localCheckpoint the
     pruned state so the subsequent overwrite does not read from the path it
-    writes (and to cut the plan lineage); (4) arg-max merge; (5) dynamic
-    partition overwrite of exactly the touched buckets.
+    writes (and to cut the plan lineage); (4) arg-max merge; (5) commit
+    exactly the touched buckets through ``write_state``'s journaled bucket
+    swap, so a crash mid-commit is rolled forward by the next read.
 
     Returns the touched bucket ids (for tests/observability).
 
     Raises ``StateLockError`` if another upsert/compact holds the path's
     lock (see ``_state_lock``).
     """
-    upd = updates.withColumn(BUCKET_COL, _bucket_expr(key_cols, key_buckets))
-    touched = sorted(
-        r[0] for r in upd.select(BUCKET_COL).distinct().collect()
-    )
+    touched = touched_buckets(updates, key_cols, key_buckets)
     if not touched:
         return []
     with _state_lock(path):
         state = read_state(spark, path, buckets=touched)
         if state is not None:
             state = state.localCheckpoint(eager=True)
-        merged = apply_changes(state, upd.drop(BUCKET_COL), key_cols, version_cols)
-        write_state(merged, path, key_buckets=key_buckets, key_cols=key_cols, dynamic_overwrite=True)
+        merged = apply_changes(state, updates, key_cols, version_cols)
+        write_state(merged, path, key_buckets=key_buckets, key_cols=key_cols)
     return touched
 
 
@@ -443,7 +430,10 @@ def compact_state(
     written to a temp directory first, then the old state is moved aside (not
     deleted) before the temp is renamed in — no step ever deletes the only
     complete copy, so a crash at any point leaves either the old or the new
-    state recoverable on disk. On Delta this maps to OPTIMIZE + ZORDER, is
+    state recoverable on disk. A tmp dir left by an earlier crash is wiped
+    first: the bucket swap replaces only the buckets it writes, so a stale
+    tmp compacted to a different bucket count would otherwise leak its old
+    buckets into the result. On Delta this maps to OPTIMIZE + ZORDER, is
     ACID, and needs no coordination."""
     import shutil
 
@@ -453,6 +443,7 @@ def compact_state(
             return
         tmp = f"{path}.compact-tmp"
         old = f"{path}.compact-old"
+        shutil.rmtree(tmp, ignore_errors=True)  # write_state clears its own .staged
         write_state(state.localCheckpoint(eager=True), tmp, key_buckets=key_buckets)
         shutil.rmtree(old, ignore_errors=True)
         os.rename(path, old)
@@ -522,6 +513,11 @@ def upsert_changes_delta(
     matched keys — the same O(touched data) incrementality the dirty-bucket
     path hand-builds. Requires delta-spark (``delta_available()``); a session
     configured with the Delta catalog extensions.
+
+    UNVERIFIED: delta-spark is not a dependency of this repo, so the MERGE
+    itself has never executed in its tests. Only the merge-condition SQL
+    (``_merge_key_condition`` / ``_merge_newer_condition``) is tested,
+    against the batch total order; the Delta-gated tests skip.
     """
     if not delta_available():
         raise ImportError(

@@ -49,6 +49,7 @@ from cdc_postgresql_clickhouse_spark.operators.state import (
     _bucket_expr,
     _state_lock,
     read_state,
+    touched_buckets,
     write_state,
 )
 from cdc_postgresql_clickhouse_spark.streaming.mvstore import (
@@ -73,12 +74,7 @@ def ingest_batch_mv(
     import os
 
     b = batch.select("user_id", "us", "eid", "event_type", "cents")
-    touched = sorted(
-        r[0]
-        for r in b.select(_bucket_expr(("user_id",), key_buckets).alias("bk"))
-        .distinct()
-        .collect()
-    )
+    touched = touched_buckets(b, ("user_id",), key_buckets)
     if not touched:
         return
     keys_path = os.path.join(state_path, "keys")
@@ -217,7 +213,6 @@ def ingest_batch_mv(
             keys_path,
             key_buckets=key_buckets,
             key_cols=("user_id",),
-            dynamic_overwrite=True,
         )
 
 

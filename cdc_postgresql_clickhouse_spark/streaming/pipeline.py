@@ -21,11 +21,11 @@ plan (survey §3.1):
   the state table itself (ST3), the 100 TB posture.
 
 Read-after-write caveat: dirty bucket partitions of the state path are
-rewritten per batch (dynamic partition overwrite), so a *lazy* DataFrame
-previously read from it becomes invalid once a new batch touches the same
-buckets — re-read the path after updates. On Delta the overwrite is replaced
-by ACID ``MERGE INTO`` and snapshot isolation removes the caveat; this
-mirrors ClickHouse where un-FINAL reads race background merges.
+rewritten per batch (``write_state``'s journaled bucket swap), so a *lazy*
+DataFrame previously read from it becomes invalid once a new batch touches
+the same buckets — re-read the path after updates. On Delta the swap is
+replaced by ACID ``MERGE INTO`` and snapshot isolation removes the caveat;
+this mirrors ClickHouse where un-FINAL reads race background merges.
 """
 
 from __future__ import annotations

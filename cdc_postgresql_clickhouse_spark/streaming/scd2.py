@@ -15,7 +15,8 @@ upsert and ``streaming/dedup.py``):
   lossless re-encoding), union the batch, DISTINCT for at-least-once
   replay tolerance (a replayed change row is identical in every column),
   recompute the per-key interval chain with one lead() window, and
-  dynamically overwrite exactly the touched buckets.
+  commit exactly the touched buckets through ``write_state``'s journaled
+  bucket swap (crash-atomic per bucket, rolled forward on the next read).
 - LATE/OUT-OF-ORDER data is handled by construction: the chain recompute
   splices a late change into the middle of its key's timeline and closes /
   reopens the neighboring intervals — the case an append-only SCD2 sink
@@ -34,9 +35,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from cdc_postgresql_clickhouse_spark.operators.state import (
-    _bucket_expr,
     _state_lock,
     read_state,
+    touched_buckets,
     write_state,
 )
 
@@ -69,20 +70,15 @@ def ingest_batch_scd2(
 ) -> None:
     """Splice one micro-batch of change rows into the SCD2 state."""
     b = batch.select(*_RAW_COLS)
-    touched = sorted(
-        r[0]
-        for r in b.select(_bucket_expr(("user_id",), key_buckets).alias("bk"))
-        .distinct()
-        .collect()
-    )
+    touched = touched_buckets(b, ("user_id",), key_buckets)
     if not touched:
         return
     with _state_lock(state_path):
         state = read_state(spark, state_path, buckets=touched)
         if state is not None:
             # intervals -> raw rows (lossless: valid_from_es is the es);
-            # localCheckpoint so the bucket overwrite below never reads its
-            # own input files
+            # localCheckpoint so the bucket swap below never reads its own
+            # input files
             prior = state.select(
                 "user_id",
                 "event_id",
@@ -100,7 +96,6 @@ def ingest_batch_scd2(
             state_path,
             key_buckets=key_buckets,
             key_cols=("user_id",),
-            dynamic_overwrite=True,
         )
 
 

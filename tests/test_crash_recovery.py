@@ -502,3 +502,84 @@ def test_lock_free_read_on_never_written_state(spark, tmp_path):
     assert read_state(spark, path) is None
     # and the lock was released: a second read works too
     assert read_state(spark, path) is None
+
+
+def test_cdc_pipeline_crash_mid_bucket_swap_replays_exact(spark, tmp_path, monkeypatch):
+    """The flagship path (run_cdc_pipeline -> upsert_changes_bucketed ->
+    write_state) survives a crash inside the bucket swap. Batch 1 dies
+    after its first bucket rename, with the second bucket's directory
+    already deleted: one bucket new, one EMPTY on disk, the rest old. The
+    restarted stream replays batch 1 from the same checkpoint; the journal
+    roll-forward must restore the emptied bucket's history before the
+    merge, so the final state equals the one-shot oracle."""
+    import json
+
+    from cdc_postgresql_clickhouse_spark.operators import state as state_mod
+    from cdc_postgresql_clickhouse_spark.operators.cdc_transform import (
+        changes_to_state_updates,
+    )
+    from cdc_postgresql_clickhouse_spark.operators.state import (
+        _SWAP_JOURNAL,
+        apply_changes,
+        consistency_check,
+        current_state,
+        read_state,
+    )
+    from cdc_postgresql_clickhouse_spark.sources.envelope import (
+        golden_workload_df,
+        golden_workload_envelopes,
+    )
+    from cdc_postgresql_clickhouse_spark.streaming.pipeline import run_cdc_pipeline
+
+    env_dir, state = tmp_path / "env", str(tmp_path / "state")
+    ckpt = str(tmp_path / "ckpt")
+    env_dir.mkdir()
+    events = golden_workload_envelopes()
+
+    def land(i: int) -> None:
+        with open(env_dir / f"batch{i}.json", "w") as fh:
+            for e in events[8 * i : 8 * i + 8]:
+                fh.write(json.dumps(e) + "\n")
+
+    def run() -> None:
+        # 4 buckets: every batch touches several buckets that already hold
+        # history of keys the batch does not carry
+        run_cdc_pipeline(
+            spark, str(env_dir), state, ckpt, key_buckets=4, max_files_per_trigger=1
+        )
+
+    land(0)
+    run()
+    committed = {d for d in os.listdir(state) if d.startswith("__bucket=")}
+    for i in (1, 2, 3):
+        land(i)
+
+    real_rename = os.rename
+    renames: list[str] = []
+
+    def crashing_rename(src, dst):
+        if str(dst).startswith(os.path.abspath(state) + os.sep):
+            renames.append(os.path.basename(dst))
+            if len(renames) == 2:
+                raise OSError("injected crash between bucket renames")
+        return real_rename(src, dst)
+
+    monkeypatch.setattr(state_mod.os, "rename", crashing_rename)
+    with pytest.raises(Exception, match="injected crash"):
+        run()
+    monkeypatch.undo()
+
+    emptied = renames[1]
+    assert emptied in committed, "crash must hit a bucket holding committed rows"
+    assert os.path.exists(os.path.join(state, _SWAP_JOURNAL))
+    assert not os.path.isdir(os.path.join(state, emptied))
+
+    run()  # restart from the same checkpoint: batch 1 replays
+    got = current_state(read_state(spark, state))
+    want = current_state(
+        apply_changes(None, changes_to_state_updates(golden_workload_df(spark)))
+    )
+    assert got.count() == want.count() == 6
+    assert consistency_check(got, want)
+    assert not os.path.exists(os.path.join(state, _SWAP_JOURNAL))
+    assert not os.path.exists(f"{os.path.abspath(state)}.staged")

@@ -81,6 +81,24 @@ def test_compact_missing_state_is_noop(spark, tmp_path):
     compact_state(spark, str(tmp_path / "nope"), key_buckets=4)  # must not raise
 
 
+def test_compact_ignores_stale_tmp_from_crashed_run(spark, tmp_path):
+    """A compact-tmp dir left by a crashed earlier compaction must not leak
+    into the result. The bucket swap replaces only the buckets it writes,
+    so a stale bucket 7 would survive a 4-bucket compaction unless the
+    tmp dir is wiped first."""
+    path = str(tmp_path / "state")
+    rows = spark.createDataFrame(
+        [(f"b{i}", f"s{i % 3}") for i in range(40)], "booking_id string, status string"
+    )
+    snapshot_load(rows).repartition(8).write.parquet(path)
+    before = read_state(spark, path)
+    want = sorted(before.collect())
+    stale = before.limit(5).withColumn("booking_id", F.concat(F.lit("stale-"), "booking_id"))
+    stale.write.parquet(f"{path}.compact-tmp/__bucket=7")
+    compact_state(spark, path, key_buckets=4)
+    assert sorted(read_state(spark, path).collect()) == want
+
+
 def test_pipeline_dlq(spark, tmp_path):
     """Malformed lines land in the DLQ with raw bytes; good lines flow to
     state; the stream is never stalled or silently thinned."""
